@@ -24,36 +24,25 @@ from time_series_data_trimmer_spark.queries import REGISTRY
 import time_series_data_trimmer_spark.queries_ext  # noqa: F401
 import time_series_data_trimmer_spark.queries_parity  # noqa: F401
 import time_series_data_trimmer_spark.queries_compose  # noqa: F401
+from time_series_data_trimmer_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 LOG_DIR = "/tmp/spark-events-profile"
 
 
-def get_profiling_spark():
-    from pyspark.sql import SparkSession
-
+def enable_event_log() -> None:
+    """Turn the event log on for the session ``get_spark`` builds. The
+    settings reach spark-submit before the JVM starts, so the session
+    config itself stays in the one factory."""
     os.makedirs(LOG_DIR, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("profile_query")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.default.parallelism", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", LOG_DIR)
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": LOG_DIR,
+        "spark.eventLog.compress": "false",
+    }
+    args = " ".join(f"--conf {k}={v}" for k, v in conf.items())
+    prior = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} {prior}"
 
 
 def _event_lines(path: str):
@@ -111,7 +100,8 @@ def parse_events(path: str, t_mark_ms: float):
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = get_profiling_spark()
+    enable_event_log()
+    spark = get_spark("profile_query")
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
     log_path = os.path.join(LOG_DIR, f"eventlog_v2_{app_id}")

@@ -13,14 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
-
-DEFAULT_SAMPLE_RATE = 120.0
-
-
-def _pcols(trial_key: str | Sequence[str] | None) -> list[str]:
-    if not trial_key:
-        return []
-    return [trial_key] if isinstance(trial_key, str) else list(trial_key)
+from time_series_data_trimmer_spark.schema import DEFAULT_SAMPLE_RATE, partition_cols
 
 
 def infer_sample_rate(
@@ -33,7 +26,7 @@ def infer_sample_rate(
     """A1: per-trial ``round(1 / median(positive diffs), 2)`` with a
     120 Hz fallback (data_model.py:116-126). Exact median — never
     ``approx_percentile`` (oracle-compared)."""
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ws = Window.partitionBy(*pcols).orderBy(time_col)
     t = F.col(time_col).cast("double")
     d = df.withColumn("__diff", t - F.lag(t).over(ws))
@@ -61,7 +54,7 @@ def calibration_offset(
     (main.py:627-646). Filter pushes down to the scan; the agg is
     map-side combined."""
     t = F.col(time_col).cast("double")
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     return (
         df.filter(t.between(float(start), float(end)))
         .groupBy(*pcols)
@@ -78,7 +71,7 @@ def ffill(
     out_col: str | None = None,
 ) -> DataFrame:
     """W2: forward-fill = last non-null over the running window."""
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     w = (
         Window.partitionBy(*pcols)
         .orderBy(time_col)
@@ -126,7 +119,7 @@ def episode_overlay(
     Mode is implemented deterministically (highest count, then smallest
     value) to match pandas ``mode().iloc[0]``.
     """
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     run = (
         Window.partitionBy(*pcols)
         .orderBy(time_col)
@@ -204,7 +197,7 @@ def suggest_segments(
     ``(trial, kind, seg_start, seg_end)`` via gaps-and-islands —
     the distributed replacement for the reference's Python run loop.
     """
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ocols = list(order_cols) if order_cols else [time_col]
     ws = Window.partitionBy(*pcols).orderBy(*ocols)
     wp = Window.partitionBy(*pcols)
@@ -265,7 +258,7 @@ def sessionize(
     twin); one window pass + one map-side-combined aggregation, all on
     the trial partitioning.
     """
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ocols = list(order_cols) if order_cols else [time_col]
     ws = Window.partitionBy(*pcols).orderBy(*ocols)
     t = F.col(time_col).cast("double")

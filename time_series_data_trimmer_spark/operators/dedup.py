@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from time_series_data_trimmer_spark.functions.spread import is_tiny, spread
+
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
 DEFAULT_SHINGLE = 3
@@ -126,12 +128,10 @@ def minhash_signatures(
     4× faster than the expression form (`minhash_signature`): shingles
     materialize ONCE (Catalyst does not CSE across higher-order
     lambdas), each shingle pays exactly 2 md5 calls, and the per-seed
-    minima are partial-aggregated before the shuffle. The explicit
-    partition count matters: AQE would coalesce this CPU-bound stage to
-    one task based on its tiny byte size.
+    minima are partial-aggregated before the shuffle. The shingle stage
+    is CPU-bound, so it is spread across cores.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    d = df.repartition(par, F.col(id_col))
+    d = spread(df, id_col)
     sh = d.select(F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle)).alias("g"))
     h = sh.select(
         id_col,
@@ -275,7 +275,6 @@ def ngram_jaccard_pairs(
     truncated and by how much; production pipelines alert on that
     report rather than silently absorbing an O(|B|²) stage.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
     if max_bucket is not None and min_jaccard > 0:
         # the scale default gets the digest-collapsed plan (r5)
         return _ngram_jaccard_capped_digest(
@@ -289,7 +288,7 @@ def ngram_jaccard_pairs(
         # first max_bucket ids before the full sort materializes.
         from pyspark.sql import Window
 
-        base = df.repartition(par, F.col(id_col)).select(
+        base = spread(df, id_col).select(
             F.col(id_col),
             F.col(text_col),
             F.floor(F.length(text_col) / F.lit(length_bucket)).alias("bucket"),
@@ -304,7 +303,7 @@ def ngram_jaccard_pairs(
             .select(id_col, word_shingles(F.col(text_col), n).alias("grams"), "blk")
         )
     else:
-        base = df.repartition(par, F.col(id_col)).select(
+        base = spread(df, id_col).select(
             F.col(id_col),
             word_shingles(F.col(text_col), n).alias("grams"),
             F.floor(F.length(text_col) / F.lit(length_bucket)).alias("bucket"),
@@ -444,18 +443,14 @@ def _ngram_jaccard_capped_digest(
     """
     from pyspark.sql import Window
 
-    # r14 (guide §2.5): at the test SFs the documents scan is one row
-    # group ⇒ one task, and AQE coalesces the tiny-byte post-shuffle
-    # stages to 1 task as well — so BOTH md5-heavy stages (the digest
+    # On a tiny (single-split) corpus BOTH md5-heavy stages — the digest
     # scan and the per-distinct-digest shingle explode after the semi
-    # join, profiled at ~5.5 s on 1 of 32 cores) serialize. `tiny`
-    # keys the guard off the scan split count: at real scale the scan
-    # has ≥ par splits and post-shuffle partitions carry real bytes,
-    # so no extra exchange is ever inserted there.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    tiny = df.rdd.getNumPartitions() < par
+    # join, profiled at ~5.5 s on 1 of 32 cores — would serialize, and
+    # so would the small post-shuffle stages below. `tiny` is the
+    # spread_scan guard, taken once for every pin in this operator.
+    tiny = is_tiny(df)
     if tiny:
-        df = df.repartition(par, F.col(id_col))
+        df = spread(df, id_col)
     digest = F.md5(F.coalesce(F.col(text_col), F.lit("<NULL:ngram>")))
     # narrow membership rows; blk is a function of the digest (identical
     # text => identical length), so it rides along without text.
@@ -507,7 +502,7 @@ def _ngram_jaccard_capped_digest(
         # executes in the bg-join stage below, whose OTHER side AQE
         # coalesces to 1 partition, forcing a 1-partition re-exchange
         # of this side too. Skipped entirely at scale (tiny=False).
-        reps = reps.repartition(par, "__dg").select(
+        reps = spread(reps, "__dg").select(
             "__dg", word_shingles(F.col(text_col), n).alias("grams")
         ).localCheckpoint(eager=False)
     else:
@@ -526,11 +521,11 @@ def _ngram_jaccard_capped_digest(
     bg = blk_dg.join(gx.hint("shuffle_hash"), "__dg")
     if tiny:
         # pin the posting/pair stage too: the groupBy reuses this
-        # user-pinned exchange (same (blk, g) hash clustering), so the
+        # spread exchange (same (blk, g) hash clustering), so the
         # posting build + the candidate pair explode + the digest-pair
-        # aggregation below all run at `par` instead of the 1 task AQE
+        # aggregation below all run spread instead of on the 1 task AQE
         # coalesces tiny gram bytes to (profiled: 4.7 s on 1 core)
-        bg = bg.repartition(par, "blk", "g")
+        bg = spread(bg, "blk", "g")
     posts = (
         bg.groupBy("blk", "g")
         .agg(
@@ -573,10 +568,10 @@ def _ngram_jaccard_capped_digest(
         # pin the membership-join/doc-fan-out stages too (same
         # pathology: qualifying digest pairs are few bytes, the pair
         # fan-out is the CPU)
-        dp = dp.repartition(par, "blk", "dg_a")
+        dp = spread(dp, "blk", "dg_a")
     j1 = dp.join(ma.hint("shuffle_hash"), ["blk", "dg_a"])
     if tiny:
-        j1 = j1.repartition(par, "blk", "dg_b")
+        j1 = spread(j1, "blk", "dg_b")
     cross = (
         j1.join(mb.hint("shuffle_hash"), ["blk", "dg_b"])
         .select(F.explode("ids_a").alias("__ia"), "ids_b", "jaccard")
@@ -612,7 +607,7 @@ def _ngram_jaccard_capped_digest(
     if tiny:
         # pin the doc-pair fan-out + dedup stage on tiny corpora (same
         # AQE-coalesce pathology as the posting stage above)
-        both = both.repartition(par, "id_a", "id_b")
+        both = spread(both, "id_a", "id_b")
     return (
         both.groupBy("id_a", "id_b")
         .agg(F.max("jaccard").alias("jaccard"))
@@ -993,8 +988,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     iff the signed sum is positive. One explode + one map-side-combined
     aggregation — scales linearly, shuffles only (doc_id, 60 ints).
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(par, F.col(id_col)).select(
+    toks = spread(df, id_col).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"))
     # branch-free bit counting: sum the raw bit (0/1) plus one count —
@@ -1397,15 +1391,10 @@ def positional_grams(
         F.arrays_zip(*shifted),
         lambda s: F.md5(F.concat_ws(" ", *[s[str(i)] for i in range(k)])),
     )
-    # explicit wide repartition before the hash-heavy explode (the
-    # minhash precedent): a small local corpus scans as ONE partition
-    # and AQE would keep this CPU-bound stage narrow based on its tiny
-    # byte size; at scale the scan is already wide and this coalesces.
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # spread before the hash-heavy explode (the minhash precedent)
+    docs = df.filter(F.col(text_col).isNotNull()).filter(n_grams >= 1)
     return (
-        df.filter(F.col(text_col).isNotNull())
-        .filter(n_grams >= 1)
-        .repartition(par, F.col(id_col))
+        spread(docs, id_col)
         .select(F.col(id_col), F.posexplode(grams).alias("pos0", "gd"))
         .select(id_col, (F.col("pos0") + 1).alias("pos"), "gd")
     )

@@ -14,14 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
-
-DEFAULT_SAMPLE_RATE = 120.0
-
-
-def _pcols(trial_key: str | Sequence[str] | None) -> list[str]:
-    if not trial_key:
-        return []
-    return [trial_key] if isinstance(trial_key, str) else list(trial_key)
+from time_series_data_trimmer_spark.schema import DEFAULT_SAMPLE_RATE, partition_cols
 
 
 def take_time_slice(df: DataFrame, start: float, end: float, time_col: str = "normalized_time") -> DataFrame:
@@ -52,7 +45,7 @@ def delete_segment(
     t = F.col(time_col).cast("double")
     kept = df.filter((t < float(start)) | (t > float(end)))
 
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ws = Window.partitionBy(*pcols).orderBy(*(list(order_cols) if order_cols else [time_col]))
     wp = Window.partitionBy(*pcols)
     diff = t - F.lag(t).over(ws)
@@ -71,7 +64,7 @@ def post_delete_sample_rate(
 ) -> DataFrame:
     """A2 companion: per-trial ``round(1/max(dt, 1e-6), 3)`` after a
     collapse (data_model.py:187)."""
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ws = Window.partitionBy(*pcols).orderBy(time_col)
     t = F.col(time_col).cast("double")
     d = df.withColumn("__diff", t - F.lag(t).over(ws))
@@ -175,7 +168,7 @@ def asof_lookup(
     ``min_by`` aggregation — a single map-side-combined agg, no window,
     no sort; ties break on the earlier time like ``argmin``.
     """
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     tc = F.col(time_col).cast("double")
     key = F.struct(F.abs(tc - F.lit(float(t))).alias("d"), tc.alias("t"))
     picked = df.groupBy(*pcols).agg(
@@ -199,7 +192,7 @@ def snap_to_extremum(
 
     Returns df plus ``snap_time``. Pure window expressions.
     """
-    pcols = _pcols(trial_key)
+    pcols = partition_cols(trial_key)
     ws = Window.partitionBy(*pcols).orderBy(time_col).rowsBetween(-reach, reach)
     c = F.col(channel).cast("double")
     t = F.col(time_col).cast("double")

@@ -44,12 +44,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from time_series_data_trimmer_spark.functions.spread import spread
+from time_series_data_trimmer_spark.schema import DEFAULT_SAMPLE_RATE, partition_cols
+
 try:  # pragma: no cover - optional, absent in the test container
     from scipy import signal as _scipy_signal
 except Exception:  # pragma: no cover
     _scipy_signal = None
 
-DEFAULT_SAMPLE_RATE = 120.0
 _SEL_COL = "__in_selection"
 
 #: parameter schema per filter, mirroring FILTER_PARAM_MAP
@@ -437,26 +439,21 @@ def apply_filter(
     return df
 
 
-def _group_cols(trial_key: str | Sequence[str] | None, has_sel: bool) -> list[str]:
-    cols: list[str] = []
-    if trial_key:
-        cols = [trial_key] if isinstance(trial_key, str) else list(trial_key)
-    if has_sel:
-        cols.append(_SEL_COL)
-    return cols
-
-
-def _spread_for_kernel(df: DataFrame, gcols: list[str]) -> DataFrame:
-    """Explicitly hash-spread the trial groups before a grouped-map
-    kernel: the stage is CPU-bound in Python, and AQE's byte-based
-    coalescing would otherwise merge the small shuffle down to 1-2
-    partitions, serializing all kernels onto 1-2 workers. The explicit
-    count is honored verbatim; the subsequent groupBy reuses the same
-    hash partitioning (no extra exchange)."""
+def _apply_grouped(
+    df: DataFrame,
+    run: Callable[[pd.DataFrame], pd.DataFrame],
+    schema,
+    trial_key: str | Sequence[str] | None,
+    has_sel: bool,
+) -> DataFrame:
+    """``applyInPandas(run)`` per trial (and selection flag). The trial
+    groups are spread first: the kernel stage is CPU-bound in Python, so
+    it must not run on the one or two tasks AQE would leave it. The
+    groupBy reuses that hash partitioning (no extra exchange)."""
+    gcols = partition_cols(trial_key) + ([_SEL_COL] if has_sel else [])
     if not gcols:
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *[F.col(c) for c in gcols])
+        return df.groupBy(F.lit(1).alias("__g")).applyInPandas(run, schema=schema)
+    return spread(df, *gcols).groupBy(*gcols).applyInPandas(run, schema=schema)
 
 
 def _apply_pandas_kernel(
@@ -474,7 +471,6 @@ def _apply_pandas_kernel(
     the filtered channels are forced to double.
     """
     schema = _kernel_schema(df, channels)
-    gcols = _group_cols(trial_key, has_sel)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(time_col, kind="mergesort")
@@ -486,10 +482,7 @@ def _apply_pandas_kernel(
             pdf[ch] = fn(pdf[ch].to_numpy(dtype=float))
         return pdf
 
-    df = _spread_for_kernel(df, gcols)
-    grouped = df.groupBy(*gcols) if gcols else df.groupBy(F.lit(1).alias("__g"))
-    out = grouped.applyInPandas(run, schema=schema)
-    return out
+    return _apply_grouped(df, run, schema, trial_key, has_sel)
 
 
 def _kernel_schema(df: DataFrame, channels: Sequence[str]):
@@ -518,7 +511,6 @@ def _apply_pandas_interpolate(
     if method not in INTERPOLATE_METHODS:
         raise ValueError(f"unknown interpolate method: {method}")
     schema = _kernel_schema(df, channels)
-    gcols = _group_cols(trial_key, has_sel)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(time_col, kind="mergesort")
@@ -532,9 +524,7 @@ def _apply_pandas_interpolate(
             )
         return pdf
 
-    df = _spread_for_kernel(df, gcols)
-    grouped = df.groupBy(*gcols) if gcols else df.groupBy(F.lit(1).alias("__g"))
-    return grouped.applyInPandas(run, schema=schema)
+    return _apply_grouped(df, run, schema, trial_key, has_sel)
 
 
 def _apply_resample(
@@ -563,7 +553,6 @@ def _apply_resample(
         else:
             fields.append(f)
     schema = StructType(fields)
-    gcols = _group_cols(trial_key, False)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         out = resample_trial(pdf.sort_values(time_col, kind="mergesort"), target_fs, time_col)
@@ -572,6 +561,4 @@ def _apply_resample(
                 out[f.name] = out[f.name].astype(float)
         return out
 
-    df = _spread_for_kernel(df, gcols)
-    grouped = df.groupBy(*gcols) if gcols else df.groupBy(F.lit(1).alias("__g"))
-    return grouped.applyInPandas(run, schema=schema)
+    return _apply_grouped(df, run, schema, trial_key, False)

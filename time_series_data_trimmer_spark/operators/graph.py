@@ -11,10 +11,29 @@ like any other fact table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
+from time_series_data_trimmer_spark.functions.spread import spread
+
+
+def neighbor_pairs(list_col: str) -> Column:
+    """Explode a sorted neighbor list into its C(n, 2) upper-triangle
+    pairs: one struct ``(a, b)`` per ``(xs[i], xs[j])`` with i < j. The
+    fan-out is bounded by the caller (a cap, or degree orientation)."""
+    xs = F.col(list_col)
+    return F.explode(
+        F.flatten(
+            F.transform(
+                xs,
+                lambda x, i: F.transform(
+                    F.slice(xs, i + F.lit(2), F.size(xs)),
+                    lambda y: F.struct(x.alias("a"), y.alias("b")),
+                ),
+            )
+        )
+    )
 
 
 def pagerank(
@@ -157,32 +176,22 @@ def triangle_count(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
     )
-    # r14 wedge build (guide §2.3/§2.4/§2.5, the local_clustering
-    # rewrite): the o⨝o self-join on u (two exchanges + an
-    # AQE-coalesced CPU-dense reduce) becomes ONE user-pinned exchange
-    # on u + a sorted per-apex neighbor list + a bounded in-row pair
-    # explode (fan ≤ O(√m) by orientation). out-degree is the list
-    # SIZE — the separate out_deg aggregation folds into the same
-    # pass. nb is O(V) rows / O(m) cells, checkpointed for its two
-    # consumers (max-odeg scalar + the wedge explode).
-    par = edges.sparkSession.sparkContext.defaultParallelism
+    # r14 wedge build (the local_clustering rewrite): the o⨝o
+    # self-join on u (two exchanges + an AQE-coalesced CPU-dense
+    # reduce) becomes ONE spread exchange on u + a sorted per-apex
+    # neighbor list + a bounded in-row pair explode (fan ≤ O(√m) by
+    # orientation). out-degree is the list SIZE — the separate out_deg
+    # aggregation folds into the same pass. nb is O(V) rows / O(m)
+    # cells, checkpointed for its two consumers (max-odeg scalar + the
+    # wedge explode).
     nb = (
-        oriented.repartition(par, "u")
+        spread(oriented, "u")
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
         .localCheckpoint(eager=False)
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("v1"), y.alias("v2")),
-            ),
-        )
-    )
-    wedges = nb.select(F.explode(pair_structs).alias("__p")).select(
-        F.col("__p.v1").alias("a"), F.col("__p.v2").alias("b")
+    wedges = nb.select(neighbor_pairs("__ws").alias("__p")).select(
+        F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
     )
     # r13: count wedges and closed wedges in ONE pass over the wedge
     # self-join (left membership join + conditional sum) — the lazy
@@ -499,12 +508,9 @@ def local_clustering(
     # ran on 3 of 32 cores). Degree-orientation bounds each vertex's
     # low-neighbor fan at O(√m), so the wedge set is exactly the
     # sorted per-u neighbor list's C(fan, 2) ordered pairs: ONE
-    # user-pinned exchange on u (repartition counts are exempt from
-    # AQE coalescing → the expansion runs at defaultParallelism, which
-    # is submit-conf on a real cluster), one partial+final collect per
-    # u, and a bounded in-row pair explode — no self-join, no
-    # checkpoint (single consumer), one shuffle of o instead of two.
-    par = edges.sparkSession.sparkContext.defaultParallelism
+    # spread exchange on u, one partial+final collect per u, and a
+    # bounded in-row pair explode — no self-join, no checkpoint (single
+    # consumer), one shuffle of o instead of two.
     o = (
         canon.join(da.hint("shuffle_hash"), "a")
         .join(db.hint("shuffle_hash"), "b")
@@ -514,20 +520,11 @@ def local_clustering(
         )
     )
     nb = (
-        o.repartition(par, "u")
+        spread(o, "u")
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    wedges = nb.select("u", F.explode(pair_structs).alias("__p")).select(
+    wedges = nb.select("u", neighbor_pairs("__ws").alias("__p")).select(
         "u", F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
     )
     tri = wedges.join(canon.hint("shuffle_hash"), ["a", "b"]).select(

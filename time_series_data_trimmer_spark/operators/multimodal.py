@@ -77,13 +77,6 @@ def _decode_image_real(payload: bytes) -> np.ndarray:  # pragma: no cover
     )
 
 
-def _decode_audio_real(payload: bytes, sr: int) -> np.ndarray:  # pragma: no cover
-    raise NotImplementedError(
-        "real audio decode requires soundfile/torchaudio; integration point: "
-        "soundfile.read(io.BytesIO(payload)) → (samples, sr)"
-    )
-
-
 def extract_features(
     df: DataFrame,
     payload_col: str = "payload",

@@ -26,6 +26,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from time_series_data_trimmer_spark.functions.spread import spread
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (JVM, no UDF)."""
@@ -264,10 +266,8 @@ def lsh_signatures(
     ]
     schema = "t int, i int, " + ", ".join(f"w_{b} double" for b in range(bits))
     pdf = df.sparkSession.createDataFrame(rows, schema)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    ex = (
-        df.repartition(par, F.col(id_col))
-        .select(F.col(id_col), F.posexplode(F.col(vec_col)).alias("i", "x"))
+    ex = spread(df, id_col).select(
+        F.col(id_col), F.posexplode(F.col(vec_col)).alias("i", "x")
     )
     x = F.col("x").cast("double")
     d = ex.join(F.broadcast(pdf), "i").groupBy(id_col, "t").agg(
@@ -495,10 +495,8 @@ def ivf_assign_dec(
         (cid, i, float(x)) for cid, vec in centroids for i, x in enumerate(vec)
     ]
     cdf = df.sparkSession.createDataFrame(rows, "cid int, i int, w double")
-    par = df.sparkSession.sparkContext.defaultParallelism
-    ex = (
-        df.repartition(par, F.col(id_col))
-        .select(F.col(id_col), F.posexplode(F.col(vec_col)).alias("i", "x"))
+    ex = spread(df, id_col).select(
+        F.col(id_col), F.posexplode(F.col(vec_col)).alias("i", "x")
     )
     diff = F.col("x").cast("double") - F.col("w")
     term = rd(diff * diff, 9).cast("decimal(38,9)")
@@ -1013,12 +1011,9 @@ def covariance_matrix(
         df = df.filter(F.size(F.col(vec_col)) == int(expect_dim))
     # CPU-spread: a small/single-file vector store scans as ONE
     # partition, which would serialize the d(d+1)/2-per-row expansion
-    # into one task (the dedup-family precedent). At cluster scale
-    # defaultParallelism is cluster width, so this never narrows a
-    # wide scan; AQE coalesces if the shuffle is redundant. Only
-    # (id-free) d-float vectors move — once.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(par)
+    # into one task (the dedup-family precedent). Only (id-free)
+    # d-float vectors move — once.
+    df = spread(df)
     v = F.col(vec_col)
     n_dim = F.size(v)
     pairs = F.flatten(
@@ -1965,20 +1960,13 @@ def mmr_diversify(
             )
         ).alias("__cand")
     )
-    # r14 (guide §2.5 CPU-spread): the fold below is the query's
-    # heaviest per-row work (k unrolled argmax steps × shortlist sim
-    # lookups per query row), but the frame is one narrow row per
-    # query — AQE coalesces the join output to ONE partition on bytes
-    # alone (profiled: a single 2.1 s task while 31 cores idle). An
-    # explicit query-keyed repartition to defaultParallelism pins the
-    # fold's parallelism; user-specified partition counts are exempt
-    # from AQE coalescing, and the extra exchange moves only
-    # |queries| rows. Scale-adaptive: defaultParallelism is submit
-    # conf on a real cluster.
-    par = scored.sparkSession.sparkContext.defaultParallelism
-    per_q = cand.join(simmap.hint("shuffle_hash"), query_col).repartition(
-        par, query_col
-    )
+    # r14: the fold below is the query's heaviest per-row work (k
+    # unrolled argmax steps × shortlist sim lookups per query row), but
+    # the frame is one narrow row per query — AQE coalesces the join
+    # output to ONE partition on bytes alone (profiled: a single 2.1 s
+    # task while 31 cores idle). Spreading on the query key pins the
+    # fold's parallelism; the extra exchange moves only |queries| rows.
+    per_q = spread(cand.join(simmap.hint("shuffle_hash"), query_col), query_col)
 
     def step(acc, _i):
         def mmr_score(c):

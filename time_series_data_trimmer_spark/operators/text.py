@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from time_series_data_trimmer_spark.functions.rounding import rd
+from time_series_data_trimmer_spark.functions.spread import spread
 
 #: tiny per-language stopword marker sets for the n-gram heuristic.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -294,13 +295,16 @@ C4_RULES: list[tuple[str, "callable"]] = [
 ]
 
 
-def _c4_flag_frame(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _c4_features(df: DataFrame, text_col: str) -> DataFrame:
     # ~48 string passes (marker occurrences + noise counts) per doc: a
     # CPU-bound stage that a small local corpus would run in its ONE
     # scan partition. Round-robin spread is safe — every rule is
     # row-local (the minhash CPU-spread precedent).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    feats = language_id(quality_features(df.repartition(par), text_col), text_col)
+    return language_id(quality_features(spread(df), text_col), text_col)
+
+
+def _c4_flag_frame(df: DataFrame, text_col: str = "text") -> DataFrame:
+    feats = _c4_features(df, text_col)
     cum = None
     for i, (_, rule) in enumerate(C4_RULES):
         cond = rule()
@@ -326,8 +330,7 @@ def c4_filter_survivors(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     UDF, nothing collected. The filter is ONE conjunction (not the
     funnel's per-stage flag columns, whose inlined feature expressions
     multiply the string passes)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    feats = language_id(quality_features(df.repartition(par), text_col), text_col)
+    feats = _c4_features(df, text_col)
     return feats.filter(_c4_cond()).select(id_col, "lang_pred", "q_n_tokens")
 
 
@@ -347,8 +350,7 @@ def c4_label_frame(
     zero extra passes and zero exchanges. ``__pass`` is 1 iff the doc
     survives every C4 rule (NULL-condition rows — e.g. NULL text —
     label 0, exactly the left-join + coalesce semantics)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    feats = language_id(quality_features(df.repartition(par), text_col), text_col)
+    feats = _c4_features(df, text_col)
     return feats.select(
         *cols,
         F.when(_c4_cond(), F.lit(1)).otherwise(F.lit(0)).alias("__pass"),
@@ -374,8 +376,7 @@ def hls_vs_c4_frame(
     same decimal fold over the same token array: bit-identical."""
     from time_series_data_trimmer_spark.functions.rounding import rd
 
-    par = df.sparkSession.sparkContext.defaultParallelism
-    feats = language_id(quality_features(df.repartition(par), text_col), text_col)
+    feats = _c4_features(df, text_col)
     ws = F.filter(
         F.split(F.trim(F.col(text_col)), " "), lambda x: F.length(x) > 0
     )
@@ -471,18 +472,14 @@ def bigram_lm_score(
             F.md5(a).alias("cd"),
         ),
     )
-    # repartition BEFORE the md5-heavy explode: locally a small corpus
-    # scans as one partition and the hash work would single-thread; at
-    # scale the scan is already wide and AQE coalesces this to a no-op.
-    # The same exchange is REUSED by every branch below (bg appears in
-    # the count build and the probe side), so the scan+explode runs
-    # wide once instead of once per consumer.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    src = (
-        df.filter(F.col(text_col).isNotNull())
-        .filter(n >= 2)
-        .select(id_col, text_col)
-        .repartition(par, F.col(id_col))
+    # spread BEFORE the md5-heavy explode: a small corpus scans as one
+    # partition and the hash work would single-thread. The same exchange
+    # is REUSED by every branch below (bg appears in the count build and
+    # the probe side), so the scan+explode runs wide once instead of
+    # once per consumer.
+    src = spread(
+        df.filter(F.col(text_col).isNotNull()).filter(n >= 2).select(id_col, text_col),
+        id_col,
     )
     bg = src.select(F.col(id_col), F.explode(bigram_structs).alias("b")).select(
         id_col, F.col("b.bd").alias("bd"), F.col("b.cd").alias("cd")
@@ -495,8 +492,7 @@ def bigram_lm_score(
     )
     ctx = bgc.groupBy(F.col("cd_of_bd").alias("cd")).agg(F.sum("c2").alias("c1"))
     vocab = (
-        df.filter(F.col(text_col).isNotNull())
-        .repartition(par, F.col(id_col))
+        spread(df.filter(F.col(text_col).isNotNull()), id_col)
         .select(F.explode(words).alias("tok"))
         .agg(F.countDistinct(F.md5("tok")).alias("v"))
     )

@@ -24,7 +24,6 @@ Replay quirks of the reference deliberately NOT reproduced (SURVEY
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Mapping, Sequence
 
@@ -145,8 +144,3 @@ def apply_recipe(
         # (matching the reference, which replays filter/plugin kinds alone,
         # main.py:770-781).
     return df
-
-
-def load_recipe(path: str) -> dict:
-    with open(path, "r", encoding="utf-8") as f:
-        return json.load(f)

@@ -74,24 +74,6 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _spread_scan(df: DataFrame, key: str) -> DataFrame:
-    """CPU-spread guard for tiny single-split scans (r14, guide
-    §2.5/§6): hash-repartition to defaultParallelism ONLY when the
-    scan yields fewer partitions. At the test SFs each table is one
-    small parquet file — one row group ⇒ ONE scan task — so CPU-dense
-    row-local work fused into the scan stage (vector expansions,
-    per-token md5 folds) serializes on one core while the rest idle
-    (profiled: sim_recall_suite's Q×N×D partial-agg stage = 4.6 s on
-    1 of 32 cores). At real scale the scan has ≥ par splits and this
-    returns the input UNCHANGED — no exchange — so the guard is
-    scale-adaptive, not a local[32] constant. Keyed (deterministic
-    hash), never round-robin: retried tasks reproduce the same
-    row-to-partition assignment (guide §2.5 / SPARK-38388)."""
-    from time_series_data_trimmer_spark.functions.spread import spread_scan
-
-    return spread_scan(df, key)
-
-
 _EVK = dict(trial_key="user_id", time_col="t", order_cols=["t", "event_id"])
 
 # Shared oracle fragments. DuckDB epoch(ts) on a nanos file truncates to

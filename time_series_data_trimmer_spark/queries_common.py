@@ -30,7 +30,7 @@ from time_series_data_trimmer_spark.operators import edits
 from time_series_data_trimmer_spark.operators import sampling as sp
 from time_series_data_trimmer_spark.operators import similarity as sim
 from time_series_data_trimmer_spark.operators import text as tx
-from time_series_data_trimmer_spark.queries import REGISTRY, _events, _spread_scan, _table, register
+from time_series_data_trimmer_spark.queries import REGISTRY, _events, _table, register
 
 R = sql_rd
 
@@ -2342,7 +2342,6 @@ __all__ = [
     "_suite_mrl_branch_sql",
     "_suite_unpivot_sql",
     "_sv_cum_hist",
-    "_spread_scan",
     "_table",
     "ag",
     "annotations",

@@ -7,6 +7,7 @@ do not rely on this module's import order.
 from __future__ import annotations
 
 from time_series_data_trimmer_spark.queries_common import *  # noqa: F401,F403
+from time_series_data_trimmer_spark.functions.spread import spread
 
 
 
@@ -679,34 +680,23 @@ def _q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = Window.partitionBy("u").orderBy(
         sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()
     )
-    # r14 two-hop build (the wedge-rewrite pattern, guide §2.3/§2.4/
-    # §2.5): capped neighbor LIST per node behind a user-pinned
-    # exchange (also serves the cap window — same u clustering) + a
-    # bounded in-row pair explode (fan ≤ _AA_CAP), replacing the
-    # nbr⨝nbr self-join: one shuffle of the symmetrized edges instead
-    # of two, no checkpoint (single consumer), and the C(cap,2) pair
-    # expansion runs at defaultParallelism instead of the 1-3 tasks
-    # AQE coalesced the tiny-byte join reduce to.
-    par = spark.sparkContext.defaultParallelism
+    # r14 two-hop build (the wedge-rewrite pattern): capped neighbor
+    # LIST per node behind a spread exchange (also serves the cap
+    # window — same u clustering) + a bounded in-row pair explode
+    # (fan ≤ _AA_CAP), replacing the nbr⨝nbr self-join: one shuffle of
+    # the symmetrized edges instead of two, no checkpoint (single
+    # consumer), and the C(cap,2) pair expansion runs spread instead of
+    # on the 1-3 tasks AQE coalesced the tiny-byte join reduce to.
     nbl = (
-        sym.repartition(par, "u")
+        spread(sym, "u")
         .withColumn("__rn", F.row_number().over(wn))
         .filter(F.col("__rn") <= _AA_CAP)
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("__vs"))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__vs"),
-            lambda p, i: F.transform(
-                F.slice(F.col("__vs"), i + F.lit(2), F.size(F.col("__vs"))),
-                lambda q: F.struct(p.alias("x"), q.alias("y")),
-            ),
-        )
-    )
     hop2 = nbl.select(
-        F.col("u").alias("__via"), F.explode(pair_structs).alias("__p")
-    ).select("__via", F.col("__p.x").alias("x"), F.col("__p.y").alias("y"))
+        F.col("u").alias("__via"), gr.neighbor_pairs("__vs").alias("__p")
+    ).select("__via", F.col("__p.a").alias("x"), F.col("__p.b").alias("y"))
     term = rd(F.lit(1.0) / F.log2(F.col("d").cast("double")), 6)
     sc = (
         hop2.join(
@@ -1186,28 +1176,18 @@ def _q_graph_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         sp.hash_u32(F.col("v"), "tsdt|aa").asc(), F.col("v").asc()
     )
     # r14 two-hop build: the graph_adamic_adar_links neighbor-list
-    # rewrite (one pinned shuffle + bounded in-row pair explode
+    # rewrite (one spread shuffle + bounded in-row pair explode
     # instead of the nbr⨝nbr self-join; see that query's comment).
-    par = spark.sparkContext.defaultParallelism
     nbl = (
-        sym.repartition(par, "u")
+        spread(sym, "u")
         .withColumn("__rn", F.row_number().over(wn))
         .filter(F.col("__rn") <= _AA_CAP)
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("__vs"))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__vs"),
-            lambda p, i: F.transform(
-                F.slice(F.col("__vs"), i + F.lit(2), F.size(F.col("__vs"))),
-                lambda q: F.struct(p.alias("x"), q.alias("y")),
-            ),
-        )
-    )
     com = (
-        nbl.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.x").alias("x"), F.col("__p.y").alias("y"))
+        nbl.select(gr.neighbor_pairs("__vs").alias("__p"))
+        .select(F.col("__p.a").alias("x"), F.col("__p.b").alias("y"))
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
@@ -2229,27 +2209,17 @@ def _q_graph_edge_embeddedness(
         )
     )
     # r14 wedge build (the graph.local_clustering/triangle_count
-    # rewrite, guide §2.3/§2.4/§2.5): neighbor list per apex behind a
-    # user-pinned exchange + bounded in-row pair explode — one shuffle
-    # of the oriented edges instead of a two-exchange self-join whose
-    # CPU-dense reduce AQE coalesced to 3 tasks. `oriented` now has a
-    # single consumer, so its checkpoint is gone too.
-    par = spark.sparkContext.defaultParallelism
+    # rewrite): neighbor list per apex behind a spread exchange +
+    # bounded in-row pair explode — one shuffle of the oriented edges
+    # instead of a two-exchange self-join whose CPU-dense reduce AQE
+    # coalesced to 3 tasks. `oriented` now has a single consumer, so
+    # its checkpoint is gone too.
     nb = (
-        oriented.repartition(par, "u")
+        spread(oriented, "u")
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("w")).alias("__ws"))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__ws"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ws"), i + F.lit(2), F.size(F.col("__ws"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    wedges = nb.select("u", F.explode(pair_structs).alias("__p")).select(
+    wedges = nb.select("u", gr.neighbor_pairs("__ws").alias("__p")).select(
         "u", F.col("__p.a").alias("a"), F.col("__p.b").alias("b")
     )
     tri = wedges.join(canon.hint("shuffle_hash"), ["a", "b"]).localCheckpoint(

@@ -7,6 +7,7 @@ do not rely on this module's import order.
 from __future__ import annotations
 
 from time_series_data_trimmer_spark.queries_common import *  # noqa: F401,F403
+from time_series_data_trimmer_spark.functions.spread import spread_scan
 
 
 
@@ -822,7 +823,7 @@ def _q_emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     an all-pairs pass. Exact decimal cosines rounded before ranking,
     per-anchor keyed window, label joins on the id key. Same bounded
     candidate volume as the blocked dedup/audit paths."""
-    # r14 examined-and-reverted: _spread_scan here measured 2.7→3.7 s
+    # r14 examined-and-reverted: spread_scan here measured 2.7→3.7 s
     # SLOWER — the `emb.count()` register probe below executes the
     # spread exchange before any CPU-dense work benefits, and the
     # query's cost lives in the blocked pair join, not the scan stage.
@@ -1405,8 +1406,7 @@ def _q_emb_lsh_recall_by_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sample, the per-probe cost is one bucket scan, and truth costs
     Q·N — the standard sampled-recall audit (the IVF/PQ recall rows'
     methodology, now for the hyperplane blocker)."""
-    # r14: CPU-spread the single-split scan (guide §2.5; _spread_scan)
-    emb = _spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
     sigs = (
         sim.lsh_signatures(emb, dim=64, bits=max(_BITS_SWEEP), tables=1)
         .select("vec_id", "sig")
@@ -1584,8 +1584,7 @@ def _q_sim_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays ONE corpus assignment per branch instead of re-deriving
     centroids. Cell membership, probe ranking, and candidate ranks are
     all decimal-exact — the oracle replays them cell-for-cell."""
-    # r14: CPU-spread the single-split scan (guide §2.5; _spread_scan)
-    emb = _spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
     cents = sim.ivf_centroids(emb, 16)
     qset = emb.filter(F.col("vec_id").isin([0, 1, 2, 3, 4]))
     assigned = sim.ivf_assign_dec(emb, cents).localCheckpoint(eager=False)
@@ -1735,8 +1734,7 @@ def _q_emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve. One pass computes all four prefix dots as conditional
     decimal sums (no fourfold scan); per-(D, probe) ranks are keyed
     windows."""
-    # r14: CPU-spread the single-split scan (guide §2.5; _spread_scan)
-    emb = _spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
     ex = emb.select(
         "vec_id", F.posexplode("embedding").alias("i", "x")
     ).withColumn("x", F.col("x").cast("double"))
@@ -1846,10 +1844,10 @@ def _q_sim_recall_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH and MRL sections reconcile with them exactly (pytest), the IVF
     section differs by design (8 probes vs 5, self excluded vs kept).
     """
-    # r14: CPU-spread the single-split scan (guide §2.5; see
-    # _spread_scan) — the Q×N×D expansion + 10-column decimal partial
-    # agg below fuse into the scan stage and ran on ONE core.
-    emb = _spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
+    # r14: CPU-spread the single-split scan — the Q×N×D expansion +
+    # 10-column decimal partial agg below fuse into the scan stage and
+    # ran on ONE core.
+    emb = spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
     ex = emb.select(
         "vec_id", F.posexplode("embedding").alias("i", "x")
     ).withColumn("x", F.col("x").cast("double"))

@@ -7,6 +7,7 @@ do not rely on this module's import order.
 from __future__ import annotations
 
 from time_series_data_trimmer_spark.queries_common import *  # noqa: F401,F403
+from time_series_data_trimmer_spark.functions.spread import spread, spread_scan
 
 
 
@@ -2022,8 +2023,7 @@ def _q_retrieval_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-cosine table); every cosine is the repo's decimal-exact dot,
     6-dp rounded, so both engines pick the same candidate at every
     step."""
-    # r14: CPU-spread the single-split scan (guide §2.5; _spread_scan)
-    emb = _spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_scan(_table(spark, sf_dir, "embeddings"), "vec_id")
     # r13 (guide §2.4): ex feeds qex, norms, and the dots join — the
     # lazy form re-ran the scan+posexplode 3×.
     # NOTE (r14 checkpoint policy, VERDICT r13 #6): O(N·D) — unbounded.
@@ -2496,14 +2496,11 @@ def _q_text_kn_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(toks, 2, n - 1),
         lambda a, b: F.struct(F.md5(a).alias("vd"), F.md5(b).alias("wd")),
     )
-    # repartition BEFORE the md5-heavy explode (the bigram_lm_score
-    # lesson): locally a small corpus scans as one partition and the
-    # hash work would single-thread; at scale AQE coalesces to a no-op.
-    par = spark.sparkContext.defaultParallelism
+    # spread BEFORE the md5-heavy explode (the bigram_lm_score lesson):
+    # a small corpus scans as one partition and the hash work would
+    # single-thread.
     bg = (
-        docs.filter(n >= 2)
-        .select("doc_id", "source", "text")
-        .repartition(par, F.col("doc_id"))
+        spread(docs.filter(n >= 2).select("doc_id", "source", "text"), "doc_id")
         .select("source", F.explode(pairs).alias("b"))
         .select(
             "source", F.col("b.vd").alias("vd"), F.col("b.wd").alias("wd")

@@ -12,12 +12,20 @@ All pure driver-side metadata logic — no jobs are triggered.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, NumericType
 
 DEFAULT_SAMPLE_RATE = 120.0  # reference fallback: data_model.py:56,126
+
+
+def partition_cols(trial_key: str | Sequence[str] | None) -> list[str]:
+    """The trial key as a list of partition columns (empty for None)."""
+    if not trial_key:
+        return []
+    return [trial_key] if isinstance(trial_key, str) else list(trial_key)
 
 #: name-token → display group, mirroring the cosmetic grouping heuristic
 #: at data_model.py:310-357 (order matters: first match wins).

@@ -355,24 +355,6 @@ def corpus_diff(
     return j.select(F.col(id_col), status.alias("status"))
 
 
-def corpus_diff_summary(
-    old: "DataFrame",
-    new: "DataFrame",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> "DataFrame":
-    """Aggregate view of `corpus_diff`: one row per status with count —
-    the snapshot health report (a sudden `removed` spike is the
-    classic upstream-crawl regression signal)."""
-    from pyspark.sql import functions as F
-
-    return (
-        corpus_diff(old, new, id_col, text_col)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
 def write_sharded_with_manifest(
     df: DataFrame,
     out_dir: str,

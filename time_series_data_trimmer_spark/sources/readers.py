@@ -67,17 +67,6 @@ def read_trial_csv(
     return df
 
 
-def write_clean(df: DataFrame, path: str, *, fmt: str = "parquet", partition_by: str | None = None) -> None:
-    """S4: clean sink. Parquet partitioned by trial at scale; CSV parity."""
-    writer = df.write.mode("overwrite")
-    if fmt == "csv":
-        writer.option("header", True).csv(path)
-    else:
-        if partition_by and partition_by in df.columns:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # S7: project catalog (project_manager.py:10-72)
 # ---------------------------------------------------------------------------

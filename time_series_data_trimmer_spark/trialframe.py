@@ -22,8 +22,7 @@ from time_series_data_trimmer_spark import schema as _schema
 from time_series_data_trimmer_spark.operators import edits as _edits
 from time_series_data_trimmer_spark.operators import aggregates as _aggs
 from time_series_data_trimmer_spark.operators.filters import apply_filter
-
-DEFAULT_SAMPLE_RATE = 120.0
+from time_series_data_trimmer_spark.schema import DEFAULT_SAMPLE_RATE
 
 
 @dataclass
